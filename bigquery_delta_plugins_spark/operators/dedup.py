@@ -809,7 +809,8 @@ def _cc_rounds(
         # over a billion-edge graph costs real compute there, while the
         # saved driver actions are trivia.
         per_step = 2 if fuse else 1
-        for _ in range(max_iter // per_step):
+        # ceiling division: an odd max_iter still gets its last round
+        for _ in range(-(-max_iter // per_step)):
             stats["star_rounds"] += per_step
             # lazy checkpoints: the sig agg (which scans every
             # partition) is the materializing action for the whole step
@@ -837,8 +838,9 @@ def _cc_rounds(
             _release_checkpoint(star_cp)
             # (edge cache released by connected_components' finally)
             raise RuntimeError(
-                f"connected_components did not converge in {max_iter} "
-                "star rounds — impossible for a finite graph; indicates "
+                "connected_components did not converge in "
+                f"{stats['star_rounds']} star rounds (max_iter={max_iter}) "
+                "— impossible for a finite graph; indicates "
                 "a logic bug, not an input property"
             )
         # fixpoint is a star forest: every non-root points straight at

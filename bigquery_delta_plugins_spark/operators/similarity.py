@@ -298,6 +298,13 @@ def vec_centroid_dots(vec: Column, signs: list[list[int]]) -> Column:
     return _cached_udf(("centroids", S.tobytes()), build)(vec)
 
 
+def _cosine(dot_ab: Column, norm_a: Column, norm_b: Column) -> Column:
+    """``dot/||a||/||b||`` with a zero norm giving a NULL cosine (the
+    fused kernels' answer) instead of an ANSI divide-by-zero error."""
+    zero = F.lit(0.0)
+    return (dot_ab / F.nullif(norm_a, zero) / F.nullif(norm_b, zero)).alias("cosine")
+
+
 def cosine_pairs(
     df: DataFrame, id_col: str, vec_col: str, *, threshold: float = 0.4,
     dim: int | None = None,
@@ -322,9 +329,7 @@ def cosine_pairs(
         .select(
             "id_a",
             "id_b",
-            (vec_dot(F.col("va"), F.col("vb")) / F.col("na") / F.col("nb")).alias(
-                "cosine"
-            ),
+            _cosine(vec_dot(F.col("va"), F.col("vb")), F.col("na"), F.col("nb")),
         )
         .filter(F.col("cosine") >= threshold)
     )
@@ -736,9 +741,7 @@ def ann_topk_ivf(
         .select(
             "query_id",
             "neighbor_id",
-            (vec_dot(F.col("qv"), F.col("cv")) / F.col("qn") / F.col("cn")).alias(
-                "cosine"
-            ),
+            _cosine(vec_dot(F.col("qv"), F.col("cv")), F.col("qn"), F.col("cn")),
         )
     )
     return _topk(joined, k)
@@ -813,9 +816,7 @@ def ann_lsh_topk(
             .select(
                 "query_id",
                 "neighbor_id",
-                (vec_dot(F.col("qv"), F.col("cv")) / F.col("qn") / F.col("cn")).alias(
-                    "cosine"
-                ),
+                _cosine(vec_dot(F.col("qv"), F.col("cv")), F.col("qn"), F.col("cn")),
             )
         )
         return _topk(joined, k)

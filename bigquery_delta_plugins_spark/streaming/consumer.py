@@ -23,6 +23,7 @@ rule's lineage requirement.
 
 from __future__ import annotations
 
+import logging
 import os
 import threading
 import time
@@ -43,10 +44,12 @@ from ..operators.merge import merge_apply
 from ..retry import PermanentFailure, run_with_retry
 from ..types import DDLEvent, DDLOp, SourceProperties
 
+log = logging.getLogger(__name__)
+
 
 def _phase_mark(phases: dict, name: str, since: float) -> float:
-    """Record a phase duration and return the new timestamp (the
-    chainable form of ``EventConsumer._mark_phase``)."""
+    """The phase clock: record ``phases[name]`` as the seconds since
+    ``since`` and return now, so consecutive phases chain."""
     now = time.monotonic()
     phases[name] = round(now - since, 3)
     return now
@@ -246,8 +249,6 @@ class EventConsumer:
         discoveries (cold start, late-appearing tables) so steady-state
         streams show exactly one; declare ``tables=[...]`` explicitly
         to skip the per-batch scan entirely."""
-        import logging
-
         present = sorted(
             (r["d"], r["t"])
             for r in batch_df.select(
@@ -257,38 +258,28 @@ class EventConsumer:
             .collect()
         )
         with self._topology_lock:
-            if self._topology_cache is None:
+            known = self._topology_cache
+            unseen = sorted(set(present) - set(known or []))
+            if known is None or unseen:
                 self.topology_discoveries += 1
-                self._topology_cache = list(present)
-                logging.getLogger(__name__).warning(
-                    "multi-table topology discovered from batch data "
-                    "(%d tables); declare tables=[...] for steady-state "
-                    "streams to skip the per-batch discovery scan",
-                    len(present),
+                self._topology_cache = sorted(set(known or []) | set(present))
+                log.warning(
+                    "multi-table topology: tables discovered from batch data "
+                    "joined the fan-out: %s; declare tables=[...] for "
+                    "steady-state streams to skip the per-batch discovery scan",
+                    unseen,
                 )
-            else:
-                unseen = sorted(set(present) - set(self._topology_cache))
-                if unseen:
-                    self.topology_discoveries += 1
-                    self._topology_cache = sorted(
-                        set(self._topology_cache) | set(unseen)
-                    )
-                    logging.getLogger(__name__).warning(
-                        "tables first appearing mid-stream without a "
-                        "CREATE_TABLE event joined the fan-out: %s",
-                        unseen,
-                    )
         return present
 
     def _apply_ddl_once(self, event: DDLEvent) -> None:
         """One DDL apply attempt (handleDDL,
         BigQueryEventConsumer.java:340-524)."""
         op = event.op
+        db_path = os.path.join(
+            self.warehouse, get_normalized_dataset_name(self.dataset_name, event.database)
+        )
         if op == DDLOp.CREATE_DATABASE:
-            os.makedirs(
-                os.path.join(self.warehouse, get_normalized_dataset_name(self.dataset_name, event.database)),
-                exist_ok=True,
-            )
+            os.makedirs(db_path, exist_ok=True)
         elif op == DDLOp.DROP_DATABASE:
             if self.require_manual_drops:
                 raise PermanentFailure(
@@ -297,54 +288,24 @@ class EventConsumer:
                 )
             import shutil
 
-            shutil.rmtree(
-                os.path.join(self.warehouse, get_normalized_dataset_name(self.dataset_name, event.database)),
-                ignore_errors=True,
-            )
+            shutil.rmtree(db_path, ignore_errors=True)
         elif op == DDLOp.CREATE_TABLE:
-            tschema = schemas.target_schema(
-                event.schema,
-                ordering=self.source.ordering,
-                sort_key_types=self.source.sort_key_types or None,
-            )
-            # persist sort-key types with the table so an unordered
-            # resume needs no caller-supplied SourceProperties (the
-            # reference persists BigQueryTableState via putState,
-            # BigQueryEventConsumer.java:551-552,1605-1613)
-            extra_props = {}
-            if self.source.sort_key_types:
-                extra_props["sort_key_types"] = [
-                    dt.json() for dt in self.source.sort_key_types
-                ]
-            if self.normalize_names:
-                tschema = self._normalize_schema(tschema)
             # Snapshot-abandon cleanup (O29): a CREATE_TABLE replayed over
             # a table whose last commit left a direct load half-finished
             # means the source restarted the snapshot — drop the
             # half-loaded table and start clean
             # (BigQueryEventConsumer.java:167,392-399).
-            path = self._table_path(event.database, event.table)
-            if os.path.exists(os.path.join(path, "_manifests", "_current")):
-                t = LakeTable(self.spark, path)
-                if t.direct_load_in_progress() is not None:
-                    import logging
-
-                    logging.getLogger(__name__).warning(
+            if self.table_exists(event.database, event.table):
+                t = self.table(event.database, event.table)
+                loading = t.direct_load_in_progress()
+                if loading is not None:
+                    log.warning(
                         "dropping half-loaded table %s (direct load of batch "
                         "%s never completed) before CREATE_TABLE replay",
-                        path, t.direct_load_in_progress(),
+                        t.path, loading,
                     )
                     t.drop()
-            LakeTable.create(
-                self.spark,
-                self._table_path(event.database, event.table),
-                tschema,
-                [self._norm_field(k) for k in event.primary_keys],
-                num_buckets=self.num_buckets,
-                ordering=self.source.ordering,
-                properties=extra_props,
-                if_not_exists=True,
-            )
+            self._create_table(event)
         elif op == DDLOp.DROP_TABLE:
             if self.require_manual_drops:
                 raise PermanentFailure(
@@ -356,32 +317,45 @@ class EventConsumer:
         elif op == DDLOp.TRUNCATE_TABLE:
             self.table(event.database, event.table).truncate()
         elif op == DDLOp.ALTER_TABLE:
-            path = self._table_path(event.database, event.table)
-            new_target = schemas.target_schema(
-                event.schema,
-                ordering=self.source.ordering,
-                sort_key_types=self.source.sort_key_types or None,
-            )
-            if self.normalize_names:
-                new_target = self._normalize_schema(new_target)
-            if not os.path.exists(os.path.join(path, "_manifests", "_current")):
-                # create-if-missing (BigQueryEventConsumer.java:462-470)
-                LakeTable.create(
-                    self.spark, path, new_target,
-                    [self._norm_field(k) for k in event.primary_keys],
-                    num_buckets=self.num_buckets, ordering=self.source.ordering,
+            if self.table_exists(event.database, event.table):
+                self.table(event.database, event.table).alter_add_columns(
+                    self._target_schema(event)
                 )
             else:
-                LakeTable(self.spark, path).alter_add_columns(new_target)
+                # create-if-missing (BigQueryEventConsumer.java:462-470)
+                self._create_table(event)
         elif op == DDLOp.RENAME_TABLE:
             # explicitly unsupported, logged & skipped
             # (BigQueryEventConsumer.java:491-497)
-            import logging
-
-            logging.getLogger(__name__).warning(
+            log.warning(
                 "RENAME_TABLE is not supported; ignoring rename of %s.%s",
                 event.database, event.table,
             )
+
+    def _target_schema(self, event: DDLEvent):
+        tschema = schemas.target_schema(
+            event.schema,
+            ordering=self.source.ordering,
+            sort_key_types=self.source.sort_key_types or None,
+        )
+        return self._normalize_schema(tschema) if self.normalize_names else tschema
+
+    def _create_table(self, event: DDLEvent) -> None:
+        # persist sort-key types with the table so an unordered resume
+        # needs no caller-supplied SourceProperties (the reference
+        # persists BigQueryTableState via putState,
+        # BigQueryEventConsumer.java:551-552,1605-1613)
+        types = self.source.sort_key_types
+        LakeTable.create(
+            self.spark,
+            self._table_path(event.database, event.table),
+            self._target_schema(event),
+            [self._norm_field(k) for k in event.primary_keys],
+            num_buckets=self.num_buckets,
+            ordering=self.source.ordering,
+            properties={"sort_key_types": [dt.json() for dt in types]} if types else {},
+            if_not_exists=True,
+        )
 
     def _dml_retry(self, fn):
         """Run one idempotent write/commit unit under the DML retry
@@ -402,19 +376,14 @@ class EventConsumer:
     def _normalize_schema(self, schema):
         from pyspark.sql import types as T
 
-        from ..normalize import normalize_field_name
-
-        fields = [
+        return T.StructType([
             T.StructField(
-                normalize_field_name(f.name, self.flexible_column_naming)
-                if not f.name.startswith("_")
-                else f.name,
+                f.name if f.name.startswith("_") else self._norm_field(f.name),
                 f.dataType,
                 f.nullable,
             )
             for f in schema.fields
-        ]
-        return T.StructType(fields)
+        ])
 
     # ------------------------------------------------------------------- DML
 
@@ -435,12 +404,6 @@ class EventConsumer:
         the judge's serial-floor verdict asked for."""
         t0 = time.monotonic()
         phases: dict[str, float] = {}
-
-        def _mark(name: str, since: float) -> float:
-            now = time.monotonic()
-            phases[name] = round(now - since, 3)
-            return now
-
         table = self.table(database, table_name)
 
         # exactly-once: a batch already in the snapshot summary is replay
@@ -478,15 +441,12 @@ class EventConsumer:
                 F.sum((F.col(C.OPERATION) != C.OP_INSERT).cast("long")).alias("ni"),
                 F.sum((~live_pred).cast("long")).alias("replayed"),
             ).first()
-            _mark("preagg", tp)
+            _phase_mark(phases, "preagg", tp)
             if (agg["n"] or 0) == 0:
                 return self._record(table, batch_id, t0, skipped=True,
                                     reason="empty batch", phases=phases)
             if (agg["ni"] or 0) == 0 and (agg["replayed"] or 0) == 0:
-                rows = staged
-                if self.row_transform is not None:
-                    rows = self.row_transform(rows)
-                target_rows = self._staged_to_target_rows(rows, table)
+                target_rows = self._staged_to_target_rows(staged, table)
                 snap = self._dml_retry(
                     lambda: table.append(
                         target_rows, batch_id, max_seq=agg["max_seq"]
@@ -539,7 +499,7 @@ class EventConsumer:
         try:
             tp = time.monotonic()
             srow, drows = self._stats_job(staged, diff, live_pred, snap_pred, pks, nb)
-            tp = _mark("stats", tp)
+            tp = _phase_mark(phases, "stats", tp)
             n_events = srow["n_events"] or 0
             if n_events == 0:
                 return self._record(table, batch_id, t0, skipped=True,
@@ -559,10 +519,9 @@ class EventConsumer:
                 # (MultiGCSWriter.java:73-76 split; the reference
                 # direct-loads snapshot blobs regardless of table state).
                 fast_path = "snapshot_append"
-                snap_rows = staged.filter(live_pred & snap_pred)
-                if self.row_transform is not None:
-                    snap_rows = self.row_transform(snap_rows)
-                snap_rows = self._staged_to_target_rows(snap_rows, table)
+                snap_rows = self._staged_to_target_rows(
+                    staged.filter(live_pred & snap_pred), table
+                )
                 if n_diff == 0:
                     snap = self._dml_retry(
                         lambda: table.append(
@@ -570,7 +529,7 @@ class EventConsumer:
                             advance_batch=True,
                         )
                     )
-                    _mark("snapshot_load", tp)
+                    _phase_mark(phases, "snapshot_load", tp)
                     return self._record(
                         table, batch_id, t0, snap=snap, n_events=n_events,
                         seq_range=seq_range, fast_path=fast_path, phases=phases,
@@ -582,7 +541,7 @@ class EventConsumer:
                         advance_batch=False,
                     )
                 )
-                tp = _mark("snapshot_load", tp)
+                tp = _phase_mark(phases, "snapshot_load", tp)
 
             if n_diff == 0:
                 snap = self._dml_retry(
@@ -621,7 +580,7 @@ class EventConsumer:
             snap = self._dml_retry(
                 lambda: table.overwrite_buckets(new_rows, touched, batch_id, max_seq)
             )
-            _mark("merge_write", tp)
+            _phase_mark(phases, "merge_write", tp)
             return self._record(
                 table, batch_id, t0, snap=snap, n_events=n_events,
                 seq_range=seq_range, phases=phases, touched=touched,
@@ -660,8 +619,7 @@ class EventConsumer:
         diff = diff.observe(obs, F.max(F.col(C.SEQUENCE_NUM)).alias("max_seq"))
         diff = diff.persist()
         try:
-            tp = time.monotonic()
-            phases["pre"] = round(tp - t0, 3)
+            tp = _phase_mark(phases, "pre", t0)
             if src.ordering == C.UN_ORDERED and src.sort_key_types:
                 self._ensure_sort_key_column(table, src)
             target = table.read()
@@ -676,7 +634,7 @@ class EventConsumer:
                 strategy=self.single_job_merge_strategy,
                 unique_key_target=self.assume_unique_keys,
             )
-            self._mark_phase(phases, "plan", tp)
+            _phase_mark(phases, "plan", tp)
 
             def write_and_commit():
                 tw = time.monotonic()
@@ -711,7 +669,7 @@ class EventConsumer:
             # footer read / manifest commit re-runs the idempotent job
             # (failed attempt's files become vacuum-reclaimable orphans)
             snap = self._dml_retry(write_and_commit)
-            self._mark_phase(phases, "merge_write", tp)
+            _phase_mark(phases, "merge_write", tp)
             return self._record(
                 table, batch_id, t0, snap=snap, phases=phases,
                 merge_strategy=self.single_job_merge_strategy,
@@ -719,10 +677,6 @@ class EventConsumer:
             )
         finally:
             diff.unpersist()
-
-    @staticmethod
-    def _mark_phase(phases: dict, name: str, since: float) -> None:
-        phases[name] = round(time.monotonic() - since, 3)
 
     # ------------------------------------------- source / sort-key state
 
@@ -775,6 +729,11 @@ class EventConsumer:
 
     # ------------------------------------------- multi-table + mixed batches
 
+    # Sub-step id stride inside one mixed batch: DML segments between DDL
+    # sequence points get lake batch ids batch_id*STRIDE + i (monotone
+    # across outer batches for any DDL count < STRIDE).
+    MIXED_BATCH_STRIDE = 1000
+
     def apply_multi_table_batch(
         self,
         batch_df: DataFrame,
@@ -785,70 +744,10 @@ class EventConsumer:
         tables: list[tuple[str, str]] | None = None,
         max_workers: int = 4,
     ) -> list[dict]:
-        """O23: apply one micro-batch carrying MANY tables' events.
-
-        The reference fans out one load+merge task per table blob on a
-        thread pool and aggregates errors (processBlobsInParallel,
-        BigQueryEventConsumer.java:691-729; parallel GCS close
-        MultiGCSWriter.java:131-184).  Here the batch DataFrame carries
-        ``(_database, _table)`` columns; each table's sub-batch applies
-        concurrently on a driver thread pool (Spark schedules the
-        per-table jobs in parallel — inter-table concurrency — while
-        each table's plan is itself data-parallel).  A table that fails
-        does not stop the others; errors are aggregated and re-raised
-        after every table completes, and the caller's checkpoint commit
-        happens only if nothing failed — replaying the batch is a no-op
-        for the tables that DID commit (snapshot batch-id dedup), so the
-        retry applies exactly the failed tables.
-        """
-        from concurrent.futures import ThreadPoolExecutor
-
-        # One materialization shared by every per-table filter: without
-        # the persist each table's sub-batch (and the discovery scan)
-        # re-computes the full batch subtree — T redundant passes per
-        # batch on a T-table stream.
-        release = tables is None or len(tables) > 1
-        if release:
-            batch_df = batch_df.persist()
-        if tables is None:
-            tables = self._discover_topology(batch_df, database_col, table_col)
-
-        def one(db: str, tb: str) -> dict:
-            sub = batch_df.filter(
-                (F.col(database_col) == db) & (F.col(table_col) == tb)
-            ).drop(database_col, table_col)
-            m = self.apply_batch(db, tb, sub, batch_id)
-            # tag with the SOURCE names (lineage carries the normalized
-            # path) so drivers can route per-table side effects (the
-            # eager CDC-out feed) without reverse-normalizing
-            m["database"], m["table_name"] = db, tb
-            return m
-
-        results: list[dict] = []
-        errors: list[tuple[str, str, Exception]] = []
-        try:
-            with ThreadPoolExecutor(max_workers=max_workers) as ex:
-                futs = {ex.submit(one, db, tb): (db, tb) for db, tb in tables}
-                for fut, (db, tb) in futs.items():
-                    try:
-                        results.append(fut.result())
-                    except Exception as e:  # noqa: BLE001 — aggregated below
-                        errors.append((db, tb, e))
-        finally:
-            if release:
-                batch_df.unpersist()
-        if errors:
-            detail = "; ".join(f"{db}.{tb}: {e}" for db, tb, e in errors)
-            raise RuntimeError(
-                f"{len(errors)}/{len(tables)} table applies failed "
-                f"(succeeded tables are committed and replay-safe): {detail}"
-            ) from errors[0][2]
-        return results
-
-    # Sub-step id stride inside one mixed batch: DML segments between DDL
-    # sequence points get lake batch ids batch_id*STRIDE + i (monotone
-    # across outer batches for any DDL count < STRIDE).
-    MIXED_BATCH_STRIDE = 1000
+        """O23: apply one DML micro-batch carrying MANY tables' events
+        (lake batch id == ``batch_id``); see :meth:`_fan_out`."""
+        return self._fan_out(batch_df, [], batch_id, 1, database_col=database_col,
+                             table_col=table_col, tables=tables, max_workers=max_workers)
 
     def apply_mixed_batch(
         self,
@@ -858,27 +757,59 @@ class EventConsumer:
         ddl_events: list[DDLEvent],
         batch_id: int,
     ) -> list[dict]:
-        """Apply a micro-batch of DML rows with DDL events interleaved in
-        sequence order (O27 forced-flush path): each DDL flushes the DML
-        segment before it, then applies, exactly like the reference's
-        applyDDL → flush() ordering (BigQueryEventConsumer.java:433,457,499).
+        """O27: one table's DML with DDL events interleaved in sequence
+        order, under the strided lake ids; see :meth:`_apply_table`."""
+        return self._apply_table(database, table_name, staged, ddl_events,
+                                 batch_id, self.MIXED_BATCH_STRIDE)
+
+    def apply_multi_table_mixed_batch(
+        self,
+        batch_df: DataFrame,
+        ddl_events: list[DDLEvent],
+        batch_id: int,
+        *,
+        database_col: str = "_database",
+        table_col: str = "_table",
+        tables: list[tuple[str, str]] | None = None,
+        max_workers: int = 4,
+    ) -> list[dict]:
+        """O23 × O27: MANY tables' DML with DDL events interleaved in
+        sequence order, under the strided lake ids; see :meth:`_fan_out`."""
+        return self._fan_out(batch_df, ddl_events, batch_id, self.MIXED_BATCH_STRIDE,
+                             database_col=database_col, table_col=table_col,
+                             tables=tables, max_workers=max_workers)
+
+    def _apply_table(
+        self,
+        database: str,
+        table_name: str,
+        staged: DataFrame,
+        ddl_events: list[DDLEvent],
+        batch_id: int,
+        stride: int,
+    ) -> list[dict]:
+        """Apply one table's share of one stream item: each DDL flushes
+        the DML segment before it, then applies, exactly like the
+        reference's applyDDL → flush() ordering
+        (BigQueryEventConsumer.java:433,457,499).  Segment ``k`` commits
+        as lake batch ``batch_id*stride + k``; stride 1 (DML-only
+        streams, lake id == item id) admits no DDL.
 
         Crash safety: DML segments are idempotent via the lake batch-id
         check; a DDL is skipped on replay when any LATER segment of this
         batch already committed (its effects are provably included), so
-        a replayed TRUNCATE cannot wipe data applied after it.
-        """
+        a replayed TRUNCATE cannot wipe data applied after it."""
         ddls = sorted(ddl_events, key=lambda e: e.sequence_num)
-        if len(ddls) >= self.MIXED_BATCH_STRIDE:
+        if len(ddls) >= stride:
             raise ValueError("too many DDL events in one micro-batch")
-        if C.BATCH_ID in staged.columns:
+        if stride > 1 and C.BATCH_ID in staged.columns:
             # sub-segments get derived lake batch ids; a carried outer
             # _batch_id column would fight the replay barrier
             staged = staged.drop(C.BATCH_ID)
         seq = F.col(C.SEQUENCE_NUM)
         latest = (
             self.table(database, table_name).latest_batch_id()
-            if self.table_exists(database, table_name)
+            if ddls and self.table_exists(database, table_name)
             else -1
         )
 
@@ -895,56 +826,57 @@ class EventConsumer:
                     )
                 return
             m = self.apply_batch(database, table_name, seg, sub_id)
+            # tag with the SOURCE names (lineage carries the normalized
+            # path) so drivers can route per-table side effects (the
+            # eager CDC-out feed) without reverse-normalizing
             m["database"], m["table_name"] = database, table_name
             results.append(m)
 
         results: list[dict] = []
         lo = None
         for i, ev in enumerate(ddls):
-            sub_id = batch_id * self.MIXED_BATCH_STRIDE + i
+            sub_id = batch_id * stride + i
             seg = staged.filter(seq < F.lit(ev.sequence_num))
             if lo is not None:
                 seg = seg.filter(seq > F.lit(lo))
             apply_seg(seg, sub_id)
-            next_dml_id = sub_id + 1
-            if latest >= next_dml_id:
+            lo = ev.sequence_num - 1
+            if latest >= sub_id + 1:
                 # replay: a later segment already committed, so this DDL
                 # (and its flush) already happened — skip it
-                lo = ev.sequence_num - 1
                 continue
             self.apply_ddl(ev)
-            lo = ev.sequence_num - 1
-        tail_id = batch_id * self.MIXED_BATCH_STRIDE + len(ddls)
         seg = staged if lo is None else staged.filter(seq > F.lit(lo))
-        apply_seg(seg, tail_id)
+        apply_seg(seg, batch_id * stride + len(ddls))
         return results
 
-    def apply_multi_table_mixed_batch(
+    def _fan_out(
         self,
         batch_df: DataFrame,
         ddl_events: list[DDLEvent],
         batch_id: int,
+        stride: int,
         *,
         database_col: str = "_database",
         table_col: str = "_table",
         tables: list[tuple[str, str]] | None = None,
         max_workers: int = 4,
     ) -> list[dict]:
-        """O23 × O27 composition: one micro-batch carrying MANY tables'
-        DML with DDL events interleaved in sequence order.
+        """Apply one micro-batch carrying MANY tables' events, with DDL
+        events interleaved in sequence order.
 
-        The reference applies a DDL in stream order for *any* table
-        while other tables' buffered DML flushes around it
-        (BigQueryEventConsumer.java:297-335,433,457,499).  Here each DDL
-        routes to its own table's fan-out task: tables with DDL go
-        through :meth:`apply_mixed_batch` (each DDL force-flushes the
-        DML segment before it in THAT table's sub-stream); tables
-        without DDL apply as one segment.  All tables use the STRIDE
-        sub-id space, so lake batch ids stay monotone whether or not a
-        given flush carried DDL for the table, and the caller's
-        checkpoint advances only after every table committed — a partial
-        failure retries exactly the failed tables (the committed ones
-        replay as no-ops)."""
+        The reference fans out one load+merge task per table blob on a
+        thread pool and aggregates errors (processBlobsInParallel,
+        BigQueryEventConsumer.java:691-729), applying a DDL in stream
+        order for *any* table while other tables' DML flushes around it
+        (:297-335,433,457,499).  Here the batch carries ``(_database,
+        _table)`` columns and each table's sub-batch — split at its own
+        DDL sequence points by :meth:`_apply_table` — applies concurrently
+        on a driver thread pool.  A table that fails does not stop the
+        others; errors are re-raised together after every table
+        completes, so the caller's checkpoint commit happens only if
+        nothing failed, and replaying the batch is a no-op for the
+        tables that DID commit (snapshot batch-id dedup)."""
         from concurrent.futures import ThreadPoolExecutor
 
         # Database-level DDL (CREATE/DROP DATABASE) has no table to route
@@ -956,30 +888,30 @@ class EventConsumer:
                 self.apply_ddl(ev)
             else:
                 ddls_by_table.setdefault((ev.database, ev.table), []).append(ev)
+        # One materialization shared by every per-table filter: without
+        # the persist each table's sub-batch (and the discovery scan)
+        # re-computes the full batch subtree — T redundant passes per
+        # batch on a T-table stream.
         release = tables is None or len(tables) > 1
         if release:
-            batch_df = batch_df.persist()  # shared by every per-table filter
-        if tables is None:
-            discovered = set(
-                self._discover_topology(batch_df, database_col, table_col)
-            )
-        else:
-            discovered = set(tables)
-        all_tables = sorted(discovered | set(ddls_by_table))
+            batch_df = batch_df.persist()
 
         def one(db: str, tb: str) -> list[dict]:
             sub = batch_df.filter(
                 (F.col(database_col) == db) & (F.col(table_col) == tb)
             ).drop(database_col, table_col)
-            return self.apply_mixed_batch(
-                db, tb, sub, ddls_by_table.get((db, tb), []), batch_id
+            return self._apply_table(
+                db, tb, sub, ddls_by_table.get((db, tb), []), batch_id, stride
             )
 
         results: list[dict] = []
         errors: list[tuple[str, str, Exception]] = []
         try:
+            if tables is None:
+                tables = self._discover_topology(batch_df, database_col, table_col)
+            tables = sorted(set(tables) | set(ddls_by_table))
             with ThreadPoolExecutor(max_workers=max_workers) as ex:
-                futs = {ex.submit(one, db, tb): (db, tb) for db, tb in all_tables}
+                futs = {ex.submit(one, db, tb): (db, tb) for db, tb in tables}
                 for fut, (db, tb) in futs.items():
                     try:
                         results.extend(fut.result())
@@ -991,7 +923,7 @@ class EventConsumer:
         if errors:
             detail = "; ".join(f"{db}.{tb}: {e}" for db, tb, e in errors)
             raise RuntimeError(
-                f"{len(errors)}/{len(all_tables)} mixed table applies failed "
+                f"{len(errors)}/{len(tables)} table applies failed "
                 f"(succeeded tables are committed and replay-safe): {detail}"
             ) from errors[0][2]
         return results
@@ -1077,15 +1009,16 @@ class EventConsumer:
         return base if expr is None else base + expr
 
     def _staged_to_target_rows(self, staged: DataFrame, table: LakeTable) -> DataFrame:
-        tschema = table.schema
-        cols = []
-        staged_cols = set(staged.columns)
-        for f in tschema.fields:
-            if f.name in staged_cols:
-                cols.append(F.col(f.name).alias(f.name))
-            else:
-                cols.append(F.lit(None).cast(f.dataType).alias(f.name))
-        return staged.select(*cols)
+        """Direct-load rows: the row transform, then the target schema
+        (columns the batch lacks surface NULL)."""
+        if self.row_transform is not None:
+            staged = self.row_transform(staged)
+        have = set(staged.columns)
+        return staged.select(*[
+            F.col(f.name) if f.name in have
+            else F.lit(None).cast(f.dataType).alias(f.name)
+            for f in table.schema.fields
+        ])
 
     # ------------------------------------------------------------- lineage
 

@@ -1,29 +1,33 @@
-"""Micro-batch drivers: Structured Streaming and a deterministic loop.
+"""Micro-batch drivers: one apply core, thin front-ends.
 
-Two interchangeable front-ends over ``EventConsumer.apply_batch``, both
-honoring the same exactly-once contract (reference flush/commitOffset,
-BigQueryEventConsumer.java:670-689,588-601):
+:func:`_apply_item` is the one place a stream item is applied under the
+reference's flush contract (apply every table, then commit the offset,
+BigQueryEventConsumer.java:670-729): apply, lineage, eager changelog
+feed, crash hook, checkpoint commit, auto-compaction.  The front-ends
+only turn their input into ``(item_id, dml, ddls)`` items and pick the
+route (one table, or the per-table fan-out) and the lake batch-id space:
 
-1. ``run_structured_stream`` — ``readStream`` over a parquet event
-   directory, ``foreachBatch`` apply, Spark's checkpoint offset+commit
-   log for resume.  ``maxFilesPerTrigger`` bounds batch size the way the
-   reference's ``loadInterval`` timer bounds batch wall-time (O27).
-2. ``run_microbatch_loop`` — a deterministic batch iterator with a JSON
-   commit log, used by benchmarks and crash-replay tests; identical
-   commit contract: the consumer's snapshot-summary ``batch_id`` makes a
-   replayed batch a no-op, so a crash between snapshot commit and
-   checkpoint commit converges to byte-identical state on resume.
+- ``run_microbatch_loop`` / ``run_microbatch_loop_multi`` — DML-only
+  ``(batch_id, df)`` lists with a JSON commit log; lake id == batch id.
+- ``run_mixed_stream`` / ``run_mixed_stream_multi`` — DML+DDL streams
+  keyed by position; lake ids ``idx*MIXED_BATCH_STRIDE+k``.
+- ``run_structured_stream`` — ``readStream`` + ``foreachBatch``; Spark's
+  checkpoint is the commit log; strided ids iff the stream carries
+  inline DDL.
 
-Both emit one lineage JSON line per (batch, table) into
-``<checkpoint>/lineage.jsonl``: offset range, event counts, per-bucket
-diff counts, applied snapshot id, throughput — the north-rule
-resumability audit trail.
+A crash between a snapshot commit and the checkpoint commit replays the
+item as a no-op (the consumer's snapshot-summary ``batch_id``), so the
+state converges byte-identically on resume.  Every applied (item,
+table) appends one lineage JSON line to ``<checkpoint>/lineage.jsonl``:
+offset range, event counts, per-bucket diff counts, snapshot id,
+throughput.
 """
 
 from __future__ import annotations
 
 import json
 import os
+from collections import Counter
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -102,30 +106,12 @@ def _write_changes_feed(
     chg.write.mode("overwrite").parquet(part)
 
 
-def apply_batch_df(
-    consumer: EventConsumer,
-    batch_df: DataFrame,
-    batch_id: int,
-    database: str,
-    table: str,
-    checkpoint_dir: str | None = None,
-) -> dict:
-    """Apply one micro-batch DataFrame and record lineage."""
-    m = consumer.apply_batch(database, table, batch_df, batch_id)
-    m["database"], m["table_name"] = database, table
-    if checkpoint_dir:
-        # offset range comes from the consumer's single pre-aggregation
-        # pass — no extra job per batch
-        _append_lineage(checkpoint_dir, m)
-    return m
-
-
 def _maybe_auto_compact(
     consumer: EventConsumer,
     database: str,
     table: str,
     threshold: int | None,
-    checkpoint_dir: str | None = None,
+    checkpoint_dir: str,
 ) -> None:
     """Driver-loop compaction hook: when any bucket of the table holds
     more than ``threshold`` files, bin-pack it (state-neutral commit —
@@ -147,20 +133,112 @@ def _maybe_auto_compact(
         snap = t.current_snapshot()
     except FileNotFoundError:
         return
-    counts: dict[int, int] = {}
-    for f in snap["files"]:
-        counts[f["bucket"]] = counts.get(f["bucket"], 0) + 1
+    counts = Counter(f["bucket"] for f in snap["files"])
     if counts and max(counts.values()) > threshold:
         m = t.compact(max_files_per_bucket=threshold)
-        if checkpoint_dir:
-            _append_lineage(checkpoint_dir, {
-                "event": "auto_compact",
-                "table": t.path,
-                "database": database,
-                "table_name": table,
-                "from_snapshot_id": snap["snapshot_id"],
-                **m,
-            })
+        _append_lineage(checkpoint_dir, {
+            "event": "auto_compact",
+            "table": t.path,
+            "database": database,
+            "table_name": table,
+            "from_snapshot_id": snap["snapshot_id"],
+            **m,
+        })
+
+
+def _apply_item(
+    consumer: EventConsumer,
+    item_id: int,
+    dml: DataFrame | None,
+    ddls: list[DDLEvent],
+    checkpoint_dir: str,
+    *,
+    table: tuple[str, str] | None = None,
+    tables: list[tuple[str, str]] | None = None,
+    max_workers: int = 4,
+    mixed: bool = False,
+    changes_dir: str | None = None,
+    auto_compact_files_per_bucket: int | None = None,
+    crash_after_apply_batch: int | None = None,
+    commit: bool = True,
+) -> list[dict]:
+    """Apply one stream item under the reference's flush contract —
+    every table applied before the offset commits
+    (BigQueryEventConsumer.java:670-729) — in this order: apply,
+    lineage, eager feed, crash hook, checkpoint commit, auto-compaction.
+
+    ``dml`` is the item's DML rows (None for a standalone DDL control
+    event) and ``ddls`` the DDL events interleaved in its sequence
+    range; each DDL force-flushes the DML before it
+    (BigQueryEventConsumer.java:433,457,499).  ``table=(db, tb)`` routes
+    a one-table stream on the calling thread; ``table=None`` fans the
+    item out per ``(_database, _table)`` on the consumer's thread pool
+    (``tables=None`` discovers each item's tables).  ``mixed`` picks the
+    lake batch-id space: False for DML-only streams (lake id == item id,
+    no DDL), True for DDL-capable ones (``item_id*MIXED_BATCH_STRIDE+k``).
+    ``commit=False`` under Structured Streaming, whose own commit log
+    follows ``foreachBatch``.
+
+    Crash safety: every item is one checkpoint commit, so a crash
+    replays at most one item — DML no-ops via the lake batch-id check,
+    a replayed DDL is idempotent or skipped by the consumer, and the
+    eager feed is backfilled or rewritten idempotently."""
+    if dml is None:
+        for ev in ddls:
+            consumer.apply_ddl(ev)
+        ms = []
+    elif table is None and mixed:
+        ms = consumer.apply_multi_table_mixed_batch(
+            dml, ddls, item_id, tables=tables, max_workers=max_workers
+        )
+    elif table is None:
+        ms = consumer.apply_multi_table_batch(
+            dml, item_id, tables=tables, max_workers=max_workers
+        )
+    elif mixed:
+        ms = consumer.apply_mixed_batch(*table, dml, ddls, item_id)
+    else:
+        ms = [consumer.apply_batch(*table, dml, item_id)]
+        ms[0]["database"], ms[0]["table_name"] = table
+    for m in ms:
+        _append_lineage(checkpoint_dir, m)
+        if changes_dir is not None:
+            _write_changes_feed(
+                consumer, changes_dir, m["database"], m["table_name"],
+                m["batch_id"], bool(m.get("skipped")), multi_table=table is None,
+            )
+    if crash_after_apply_batch is not None and item_id == crash_after_apply_batch:
+        raise RuntimeError(f"simulated crash after applying batch {item_id}")
+    if commit:
+        _commit(checkpoint_dir, item_id)
+    for db, tb in dict.fromkeys((m["database"], m["table_name"]) for m in ms):
+        _maybe_auto_compact(
+            consumer, db, tb, auto_compact_files_per_bucket, checkpoint_dir
+        )
+    return ms
+
+
+def _run_items(consumer: EventConsumer, items, checkpoint_dir: str, **kw) -> list[dict]:
+    """Resume from the commit log: apply every ``(item_id, dml, ddls)``
+    past the last committed item, in order."""
+    done = read_commit_log(checkpoint_dir)
+    out = []
+    for item_id, dml, ddls in items:
+        if item_id > done:
+            out.extend(_apply_item(consumer, item_id, dml, ddls, checkpoint_dir, **kw))
+    return out
+
+
+def _stream_items(items: list):
+    """Mixed-stream items ``("dml", df[, [DDLEvent, ...]])`` /
+    ``("ddl", DDLEvent)`` as ``(position, dml, ddls)``."""
+    for idx, item in enumerate(items):
+        if item[0] == "dml":
+            yield idx, item[1], (item[2] if len(item) > 2 else [])
+        elif item[0] == "ddl":
+            yield idx, None, [item[1]]
+        else:
+            raise ValueError(f"unknown stream item kind: {item[0]!r}")
 
 
 def run_microbatch_loop(
@@ -173,39 +251,21 @@ def run_microbatch_loop(
     changes_dir: str | None = None,
     auto_compact_files_per_bucket: int | None = None,
 ) -> list[dict]:
-    """Deterministic apply loop with two-phase commit: apply (atomic
-    snapshot w/ batch-id dedup), then advance the checkpoint commit log.
-    ``crash_after_apply_batch`` simulates the worst-case failure window —
-    death between the two phases — for exactly-once tests.
+    """Deterministic one-table DML loop over ``(batch_id, df)`` pairs
+    with a JSON commit log; lake batch id == ``batch_id``.
 
-    ``changes_dir``: eager CDC-out — after each applied batch, the
-    batch's changelog (LakeTable.changes_for_batch) lands as parquet
-    under ``<changes_dir>/batch=<id>/`` BEFORE the checkpoint commit, so
-    the feed is exactly-once with the same crash-window semantics as the
-    table itself: a crash between apply and checkpoint re-applies the
-    batch as a snapshot no-op and rewrites the same changelog partition
-    (mode=overwrite) idempotently.
-
-    ``auto_compact_files_per_bucket``: steady-state compaction hook —
+    ``crash_after_apply_batch`` simulates death between the snapshot
+    commit and the checkpoint commit, for exactly-once tests.
+    ``changes_dir``: eager CDC-out — each batch's changelog
+    (LakeTable.changes_for_batch) lands under ``<changes_dir>/batch=<id>``
+    before the checkpoint commit.  ``auto_compact_files_per_bucket``:
     see :func:`_maybe_auto_compact`."""
-    done = read_commit_log(checkpoint_dir)
-    out = []
-    for batch_id, df in batches:
-        if batch_id <= done:
-            continue
-        m = apply_batch_df(consumer, df, batch_id, database, table, checkpoint_dir)
-        out.append(m)
-        if changes_dir is not None:
-            _write_changes_feed(
-                consumer, changes_dir, database, table, batch_id,
-                bool(m.get("skipped")), multi_table=False,
-            )
-        if crash_after_apply_batch is not None and batch_id == crash_after_apply_batch:
-            raise RuntimeError(f"simulated crash after applying batch {batch_id}")
-        _commit(checkpoint_dir, batch_id)
-        _maybe_auto_compact(consumer, database, table,
-                            auto_compact_files_per_bucket, checkpoint_dir)
-    return out
+    return _run_items(
+        consumer, ((b, df, []) for b, df in batches), checkpoint_dir,
+        table=(database, table), crash_after_apply_batch=crash_after_apply_batch,
+        changes_dir=changes_dir,
+        auto_compact_files_per_bucket=auto_compact_files_per_bucket,
+    )
 
 
 def run_microbatch_loop_multi(
@@ -219,59 +279,21 @@ def run_microbatch_loop_multi(
     changes_dir: str | None = None,
     auto_compact_files_per_bucket: int | None = None,
 ) -> list[dict]:
-    """Multi-table apply loop (O23): every batch DataFrame carries
-    ``(_database, _table)`` columns; per flush one apply task per table
-    runs on a thread pool and the checkpoint advances only after ALL
-    tables committed — the reference's flush() contract
-    (BigQueryEventConsumer.java:670-729).  A replayed batch no-ops per
-    table via the snapshot batch-id check, so a partial failure retries
-    exactly the failed tables.
+    """Multi-table DML loop (O23): every batch DataFrame carries
+    ``(_database, _table)`` columns and fans out one apply task per
+    table; the checkpoint advances only after ALL tables committed, so
+    a partial failure retries exactly the failed tables.
 
-    ``tables=None`` discovers the topology ONCE from the union of all
-    supplied batches (one distinct-scan job total), not per flush — in
-    steady state the driver knows its topology and should pass it.
-
-    ``changes_dir``: eager per-table CDC-out feed, partitioned
-    ``<changes_dir>/<db>/<table>/batch=<id>`` — same exactly-once
-    crash-window rule as the single-table loop (the reference replicator
-    normally carries MANY tables, BigQueryEventConsumer.java:691-729, so
-    the feed must too)."""
-    done = read_commit_log(checkpoint_dir)
-    if tables is None and batches:
-        from functools import reduce
-
-        union = reduce(
-            lambda a, b: a.unionByName(b), [df for _, df in batches]
-        )
-        tables = sorted(
-            (r["d"], r["t"])
-            for r in union.selectExpr("_database as d", "_table as t")
-            .distinct()
-            .collect()
-        )
-    out = []
-    for batch_id, df in batches:
-        if batch_id <= done:
-            continue
-        ms = consumer.apply_multi_table_batch(
-            df, batch_id, tables=tables, max_workers=max_workers
-        )
-        for m in ms:
-            _append_lineage(checkpoint_dir, m)
-        out.extend(ms)
-        if changes_dir is not None:
-            for m in ms:
-                _write_changes_feed(
-                    consumer, changes_dir, m["database"], m["table_name"],
-                    batch_id, bool(m.get("skipped")), multi_table=True,
-                )
-        if crash_after_apply_batch is not None and batch_id == crash_after_apply_batch:
-            raise RuntimeError(f"simulated crash after applying batch {batch_id}")
-        _commit(checkpoint_dir, batch_id)
-        for db, tb in tables or []:
-            _maybe_auto_compact(consumer, db, tb,
-                                auto_compact_files_per_bucket, checkpoint_dir)
-    return out
+    ``tables=None`` discovers each batch's tables with one distinct-scan
+    (consumer._discover_topology); declare them in steady state.
+    ``changes_dir``: per-table feed ``<changes_dir>/<db>/<table>/batch=<id>``.
+    Other options as in :func:`run_microbatch_loop`."""
+    return _run_items(
+        consumer, ((b, df, []) for b, df in batches), checkpoint_dir,
+        tables=tables, max_workers=max_workers,
+        crash_after_apply_batch=crash_after_apply_batch, changes_dir=changes_dir,
+        auto_compact_files_per_bucket=auto_compact_files_per_bucket,
+    )
 
 
 def run_mixed_stream(
@@ -281,49 +303,20 @@ def run_mixed_stream(
     table: str,
     checkpoint_dir: str,
 ) -> list[dict]:
-    """Sequence-ordered mixed DML+DDL stream driver (O27 forced flush):
-    ``items`` is the event stream as the reference's EventConsumer sees
-    it — ``("dml", df)`` micro-batches and ``("ddl", DDLEvent)`` control
-    events, in stream order.  Each DDL implicitly flushes everything
-    before it (earlier items are separate commits); a DML item may ALSO
-    carry DDL events interleaved inside its sequence range as
-    ``("dml", df, [DDLEvent, ...])`` — the consumer splits the batch at
-    the DDL sequence points and flushes each segment before its DDL
-    (BigQueryEventConsumer.java:433,457,499).
+    """Sequence-ordered one-table DML+DDL stream (O27 forced flush):
+    ``("dml", df)`` micro-batches, optionally ``("dml", df, [DDLEvent,
+    ...])`` with DDL interleaved inside the batch's sequence range, and
+    standalone ``("ddl", DDLEvent)`` control events, in stream order.
+    Each item is one checkpoint commit keyed by its position.
 
-    Every item is its own checkpoint commit, so a crash replays at most
-    one item; DML replays no-op via the lake batch-id check and a
-    replayed DDL is either idempotent (CREATE/ALTER) or skipped by the
-    consumer when a later segment already committed."""
-    done = read_commit_log(checkpoint_dir)
-    out = []
-    for idx, item in enumerate(items):
-        if idx <= done:
-            continue
-        kind = item[0]
-        if kind == "dml":
-            df = item[1]
-            if C.BATCH_ID in df.columns:
-                # stream items are keyed by their position, not by any
-                # generator-carried batch column
-                df = df.drop(C.BATCH_ID)
-            ddls = item[2] if len(item) > 2 else []
-            # EVERY DML item routes through the STRIDE sub-id space
-            # (lake ids idx*STRIDE+k), DDL-carrying or not: a plain item
-            # keyed by bare ``idx`` after a mixed item would compare
-            # idx <= (idx')*STRIDE+k and be silently skipped as replay —
-            # the id space must be uniform for the batch-id barrier to
-            # mean anything across item kinds.
-            ms = consumer.apply_mixed_batch(database, table, df, ddls, idx)
-            for m in ms:
-                _append_lineage(checkpoint_dir, m)
-            out.extend(ms)
-        elif kind == "ddl":
-            consumer.apply_ddl(item[1])
-        else:
-            raise ValueError(f"unknown stream item kind: {kind!r}")
-        _commit(checkpoint_dir, idx)
-    return out
+    EVERY DML item uses the strided lake ids ``idx*STRIDE+k``,
+    DDL-carrying or not: a plain item keyed by bare ``idx`` after a
+    mixed item would compare below the strided barrier and be skipped
+    as replay."""
+    return _run_items(
+        consumer, _stream_items(items), checkpoint_dir,
+        table=(database, table), mixed=True,
+    )
 
 
 def run_mixed_stream_multi(
@@ -334,51 +327,20 @@ def run_mixed_stream_multi(
     tables: list[tuple[str, str]] | None = None,
     max_workers: int = 4,
     changes_dir: str | None = None,
+    auto_compact_files_per_bucket: int | None = None,
 ) -> list[dict]:
-    """Multi-table mixed DML+DDL stream driver (O23 × O27): ``items``
-    carry every table's events — ``("dml", df)`` micro-batches with
-    ``(_database, _table)`` columns, optionally ``("dml", df, [DDLEvent,
-    ...])`` with DDL interleaved inside the batch's sequence range, and
-    standalone ``("ddl", DDLEvent)`` control events; all in stream
-    order.  A standalone DDL's force-flush is implicit (earlier items
-    are separate commits); an interleaved DDL routes to its table's
-    fan-out task, which splits that table's sub-stream at the DDL's
-    sequence point (consumer.apply_multi_table_mixed_batch).  Each item
-    is one checkpoint commit over ALL tables — the reference flush
-    contract (BigQueryEventConsumer.java:670-729).
-
-    ``changes_dir``: per-table eager CDC-out feed, same layout and
-    crash-window rule as run_microbatch_loop_multi — sub-segment lake
-    batch ids (idx*STRIDE+k) each get their own feed partition."""
-    done = read_commit_log(checkpoint_dir)
-    out = []
-    for idx, item in enumerate(items):
-        if idx <= done:
-            continue
-        kind = item[0]
-        if kind == "dml":
-            df = item[1]
-            if C.BATCH_ID in df.columns:
-                df = df.drop(C.BATCH_ID)
-            ddls = item[2] if len(item) > 2 else []
-            ms = consumer.apply_multi_table_mixed_batch(
-                df, ddls, idx, tables=tables, max_workers=max_workers
-            )
-            for m in ms:
-                _append_lineage(checkpoint_dir, m)
-            out.extend(ms)
-            if changes_dir is not None:
-                for m in ms:
-                    _write_changes_feed(
-                        consumer, changes_dir, m["database"], m["table_name"],
-                        m["batch_id"], bool(m.get("skipped")), multi_table=True,
-                    )
-        elif kind == "ddl":
-            consumer.apply_ddl(item[1])
-        else:
-            raise ValueError(f"unknown stream item kind: {kind!r}")
-        _commit(checkpoint_dir, idx)
-    return out
+    """Multi-table DML+DDL stream (O23 × O27): items as in
+    :func:`run_mixed_stream`, DML carrying ``(_database, _table)``
+    columns.  An interleaved DDL routes to its table's fan-out task,
+    which splits that table's sub-stream at the DDL's sequence point;
+    each item is one checkpoint commit over ALL tables.  Options as in
+    :func:`run_microbatch_loop_multi`; feed partitions are per lake
+    sub-id ``idx*STRIDE+k``."""
+    return _run_items(
+        consumer, _stream_items(items), checkpoint_dir,
+        tables=tables, max_workers=max_workers, mixed=True, changes_dir=changes_dir,
+        auto_compact_files_per_bucket=auto_compact_files_per_bucket,
+    )
 
 
 def ddl_marker_rows(
@@ -424,38 +386,28 @@ def run_structured_stream(
     tables: list[tuple[str, str]] | None = None,
     auto_compact_files_per_bucket: int | None = None,
 ):
-    """Structured Streaming front-end: parquet file stream -> foreachBatch
-    apply.  Spark's checkpoint gives the offset/commit log; the snapshot
-    batch-id check de-duplicates the one possibly-replayed batch.
+    """Structured Streaming front-end: parquet file stream ->
+    ``foreachBatch`` -> :func:`_apply_item` with the Spark batch id as
+    item id.  Spark's checkpoint is the offset/commit log (it advances
+    only if every table of the trigger committed); the snapshot batch-id
+    check de-duplicates the one possibly-replayed batch, whose eager
+    feed partition is backfilled or rewritten idempotently.
 
     ``multi_table=True``: the stream carries ``(_database, _table)``
-    columns and every micro-batch fans out per table on the consumer's
-    thread pool (O23); ``database``/``table`` are ignored (pass
-    ``tables`` to skip per-trigger topology discovery).  foreachBatch
-    raising on any table fails the trigger, so Spark's commit log only
-    advances when ALL tables committed — the reference flush contract.
+    columns and fans out per table (O23); ``database``/``table`` are
+    ignored (pass ``tables`` to skip per-trigger topology discovery).
 
-    ``changes_dir`` works in BOTH modes: the eager CDC-out feed is
-    written inside the trigger, before Spark advances its commit log, so
-    a replayed batch (skip via snapshot batch-id) backfills an absent
-    partition and a present one is rewritten idempotently.  Multi-table
-    feeds partition per table (``<changes_dir>/<db>/<table>/batch=<id>``).
-
-    **Inline DDL**: when the stream ``schema`` carries the
-    ``constants.DDL_PAYLOAD`` column, the stream may interleave DDL
-    control rows (see :func:`ddl_marker_rows`) with DML — the
-    production shape: the reference's consumer receives DDL inline in
-    the one ordered event stream and force-flushes the buffered DML
-    before applying it (BigQueryEventConsumer.java:297-335,433,457,499).
-    Every trigger then routes through the mixed-batch consumer APIs
-    (DML segments split at each DDL's sequence point; sub-segment lake
-    batch ids use the uniform ``batch_id*STRIDE+k`` space whether or
-    not a given trigger carried DDL, so the replay barrier stays
-    monotone across triggers).  Mid-stream ALTER note: a parquet file
-    stream reads ONE fixed schema, so the stream schema must be the
-    post-evolution superset — pre-ALTER rows carry NULL in late columns
-    and the consumer projects each segment to the table's
-    schema-as-of-that-segment."""
+    **Inline DDL**: when ``schema`` carries the ``constants.DDL_PAYLOAD``
+    column, the stream may interleave DDL control rows (see
+    :func:`ddl_marker_rows`) with DML — the reference's consumer gets
+    DDL inline in the one ordered event stream and force-flushes before
+    it (BigQueryEventConsumer.java:297-335,433,457,499).  Every trigger
+    then uses the strided ``batch_id*STRIDE+k`` lake ids, DDL or not, so
+    the replay barrier stays monotone; without the column lake id ==
+    batch id.  A parquet file stream reads ONE fixed schema, so it must
+    be the post-evolution superset: pre-ALTER rows carry NULL in late
+    columns and each segment is projected to the table's schema as of
+    that segment."""
     inline_ddl = C.DDL_PAYLOAD in schema.fieldNames()
 
     def _extract_ddl(batch_df: DataFrame):
@@ -474,58 +426,17 @@ def run_structured_stream(
         return dml, ddls
 
     def _apply(batch_df: DataFrame, batch_id: int) -> None:
-        if multi_table:
-            if inline_ddl:
-                dml, ddls = _extract_ddl(batch_df)
-                ms = consumer.apply_multi_table_mixed_batch(
-                    dml, ddls, batch_id, tables=tables
-                )
-            else:
-                ms = consumer.apply_multi_table_batch(
-                    batch_df, batch_id, tables=tables
-                )
-            for m in ms:
-                _append_lineage(checkpoint_dir, m)
-            if changes_dir is not None:
-                for m in ms:
-                    _write_changes_feed(
-                        consumer, changes_dir, m["database"], m["table_name"],
-                        m.get("batch_id", batch_id), bool(m.get("skipped")),
-                        multi_table=True,
-                    )
-            for m in ms:
-                _maybe_auto_compact(
-                    consumer, m["database"], m["table_name"],
-                    auto_compact_files_per_bucket, checkpoint_dir,
-                )
-        elif inline_ddl:
-            dml, ddls = _extract_ddl(batch_df)
-            ms = consumer.apply_mixed_batch(database, table, dml, ddls, batch_id)
-            for m in ms:
-                _append_lineage(checkpoint_dir, m)
-                if changes_dir is not None:
-                    _write_changes_feed(
-                        consumer, changes_dir, database, table,
-                        m.get("batch_id", batch_id), bool(m.get("skipped")),
-                        multi_table=False,
-                    )
-            _maybe_auto_compact(
-                consumer, database, table, auto_compact_files_per_bucket,
-                checkpoint_dir,
-            )
-        else:
-            m = apply_batch_df(
-                consumer, batch_df, batch_id, database, table, checkpoint_dir
-            )
-            if changes_dir is not None:
-                _write_changes_feed(
-                    consumer, changes_dir, database, table, batch_id,
-                    bool(m.get("skipped")), multi_table=False,
-                )
-            _maybe_auto_compact(
-                consumer, database, table, auto_compact_files_per_bucket,
-                checkpoint_dir,
-            )
+        ddls = []
+        if inline_ddl:
+            batch_df, ddls = _extract_ddl(batch_df)
+        _apply_item(
+            consumer, batch_id, batch_df, ddls, checkpoint_dir,
+            table=None if multi_table else (database, table), tables=tables,
+            mixed=inline_ddl,
+            changes_dir=changes_dir,
+            auto_compact_files_per_bucket=auto_compact_files_per_bucket,
+            commit=False,
+        )
 
     reader = (
         spark.readStream.schema(schema)

@@ -174,3 +174,20 @@ def test_star_fused_check_matches_per_round_check(spark):
     assert out[True][0] == out[False][0] == _union_find(edges_raw)
     assert out[True][1] > 0  # contraction phase actually ran
     assert out[False][1] <= out[True][1] <= out[False][1] + 2
+
+
+def test_star_fused_odd_max_iter_runs_last_round(spark):
+    """An odd ``max_iter`` must not drop its last round on the fused
+    (two rounds per check) path: with ``max_iter=1`` a star forest —
+    already the contraction fixpoint — converges in the one fused step
+    instead of raising a false "did not converge"."""
+    from bigquery_delta_plugins_spark.operators import dedup as DD
+
+    # every non-root points straight at its component min: a fixpoint
+    edges = spark.createDataFrame([(2, 1), (3, 1), (11, 10)], "src long, dst long")
+    vertices = spark.createDataFrame([(v,) for v in (1, 2, 3, 10, 11)], "id long")
+    stats = {"label_rounds": 0, "star_rounds": 0}
+    res = DD._cc_rounds(edges, vertices, 0, 1, stats, fuse=True)
+    got = {(r["id"], r["component"]) for r in res.collect()}
+    assert got == _union_find([(1, 2), (1, 3), (10, 11)])
+    assert stats["star_rounds"] == 2

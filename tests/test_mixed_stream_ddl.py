@@ -400,3 +400,43 @@ def test_multi_table_standalone_create_joins_cached_topology(spark, tmp_path):
     assert c.topology_discoveries == 1  # one cold-start scan, then DDL-maintained
     assert _state(c, "db", "a") == {1: 1.0, 2: 2.0, 3: 3.0}
     assert not c.table_exists("db", "fresh")
+
+def test_mixed_stream_multi_auto_compact(spark, tmp_path, monkeypatch):
+    """run_mixed_stream_multi's compaction hook: with a threshold of 1,
+    every table's file count per bucket stays bounded and each
+    compaction appends an ``event="auto_compact"`` lineage line."""
+    import json
+
+    from bigquery_delta_plugins_spark.lake.table import LakeTable
+
+    # multiple files per bucket per commit: the regime the hook exists for
+    monkeypatch.setattr(LakeTable, "WRITE_REPARTITION", False)
+    c = consumer(spark, tmp_path)
+    create_tables(c, ("a", "b"))
+    items = [
+        ("dml", multi_rows(spark, [
+            (op, b * 4 + k + 1, uid, float(b), before, "db", tb)
+            for k, (tb, (op, uid, before)) in enumerate([
+                ("a", ("INSERT", b, None)),
+                ("a", ("UPDATE", max(b - 1, 0), max(b - 1, 0))),
+                ("b", ("INSERT", b, None)),
+                ("b", ("UPDATE", max(b - 1, 0), max(b - 1, 0))),
+            ])
+        ]))
+        for b in range(2)
+    ]
+    cp = tmp_path / "cp"
+    run_mixed_stream_multi(c, items, str(cp), tables=[("db", "a"), ("db", "b")],
+                           auto_compact_files_per_bucket=1)
+    for tb in ("a", "b"):
+        t = c.table("db", tb)
+        per_bucket: dict[int, int] = {}
+        for f in t.current_snapshot()["files"]:
+            per_bucket[f["bucket"]] = per_bucket.get(f["bucket"], 0) + 1
+        assert per_bucket and max(per_bucket.values()) <= 1, tb
+        assert {r["user_id"] for r in t.read().collect()} == set(range(2))
+    with open(cp / "lineage.jsonl") as f:
+        lines = [json.loads(line) for line in f]
+    compacted = {(e["database"], e["table_name"])
+                 for e in lines if e.get("event") == "auto_compact"}
+    assert compacted == {("db", "a"), ("db", "b")}

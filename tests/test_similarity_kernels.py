@@ -141,3 +141,25 @@ def test_vec_pair_cosine_zero_vector_yields_null(spark):
         SIM.vec_pair_cosine(F.col("v"), F.col("w")).alias("fc")
     ).collect()
     assert r["fc"] is None
+
+
+def test_sql_side_cosine_zero_vector_yields_null(spark):
+    """The SQL-side divisions in ``cosine_pairs``, the single-table
+    ``ann_lsh_topk`` and ``ann_topk_ivf`` agree with the fused kernel above: a zero vector's
+    cosine is NULL (so it never passes a threshold) instead of an ANSI
+    divide-by-zero error."""
+    rows = [(0, [0.0] * DIM), (1, [1.0] * DIM), (2, [2.0] * DIM), (3, [0.0] * DIM)]
+    df = spark.createDataFrame(rows, "id long, v array<float>")
+    pairs = {(r["id_a"], r["id_b"]): r["cosine"]
+             for r in SIM.cosine_pairs(df, "id", "v", threshold=0.5).collect()}
+    assert pairs == {(1, 2): 1.0}
+    top = {(r["query_id"], r["neighbor_id"]): r["cosine"]
+           for r in SIM.ann_lsh_topk(df, df, "id", "v", k=3).collect()}
+    # the two zero vectors share every sign-LSH bucket
+    assert (0, 3) in top and top[(0, 3)] is None
+    assert top[(1, 2)] == 1.0
+    ivf = {(r["query_id"], r["neighbor_id"]): r["cosine"]
+           for r in SIM.ann_topk_ivf(df, df, "id", "v", k=3, dim=DIM).collect()}
+    # a zero vector's centroid dots tie at 0, so both land in one cell
+    assert (0, 3) in ivf and ivf[(0, 3)] is None
+    assert ivf[(1, 2)] == 1.0

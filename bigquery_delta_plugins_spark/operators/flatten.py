@@ -20,8 +20,8 @@ Spark-first physical strategy (this is where the 100 TB design lives):
    filters first so everything downstream sees only new events; on a
    parquet-backed staging dir these predicates push down to the scan.
 
-2. **Salted hot-key pre-collapse** (north-rule requirement).  Events
-   whose identity does not change — every ``_before_<pk>`` equals its
+2. **Hot-key pre-collapse** (north-rule requirement).  Events whose
+   identity does not change — every ``_before_<pk>`` equals its
    ``<pk>`` (all self-UPDATEs, and all DELETEs, since a DELETE's before
    image is the row itself, MultiGCSWriter.java:428-448) — are collapsed
    to their max-``_sequence_num`` survivor per key *before* the
@@ -32,11 +32,11 @@ Spark-first physical strategy (this is where the 100 TB design lives):
    superset, and (ii) itself kills each dropped group member.  So
    dropping non-max members changes neither the survivor set of other
    events nor of the group.  PK-moving UPDATEs and INSERTs (null
-   before) pass through untouched.  The collapse is a two-phase
-   aggregation: ``groupBy(pk, salt)`` then ``groupBy(pk)`` — the
-   explicit salt bounds any single reducer even if map-side partial
-   aggregation is disabled; with partial aggregation on, a million
-   updates to one hot url collapse map-side and never skew the shuffle.
+   before) pass through untouched.  The collapse is one
+   ``groupBy(pk).agg(max_by(...))``: Spark plans ``max_by`` as a
+   map-side partial aggregate below the single exchange, so a million
+   updates to one hot url collapse before the shuffle and never skew a
+   reducer (pinned by tests/test_plans.py).
 
 3. **Anti-join** on the collapsed (now at most a few events per key)
    set reproduces the chain semantics exactly.  AQE may broadcast the
@@ -59,8 +59,6 @@ from pyspark.sql import functions as F
 
 from .. import constants as C
 from .ordering import happens_before
-
-DEFAULT_SALT_BUCKETS = 16
 
 
 def replay_filter(
@@ -94,27 +92,14 @@ def _self_identity_cond(primary_keys: list[str]) -> Column:
     return cond
 
 
-def _argmax_by_seq(df: DataFrame, group_cols: list[str], salt_buckets: int) -> DataFrame:
-    """Two-phase salted argmax-by-_sequence_num, preserving all columns.
-
-    ``max_by(struct(all columns), _sequence_num)`` partial-aggregates
-    map-side; the salt phase additionally caps reducer fan-in per key.
-    """
+def _argmax_by_seq(df: DataFrame, group_cols: list[str]) -> DataFrame:
+    """Argmax-by-_sequence_num per group, preserving all columns: one
+    exchange, with ``max_by`` partial-aggregated map-side below it."""
     cols = df.columns
     packed = F.struct(*[F.col(c) for c in cols])
-
-    if salt_buckets > 1:
-        salted = df.groupBy(
-            *group_cols,
-            F.pmod(F.xxhash64(F.col(C.SEQUENCE_NUM)), F.lit(salt_buckets)).alias("__salt"),
-        ).agg(F.max_by(packed, F.col(C.SEQUENCE_NUM)).alias("__row"))
-        final = salted.groupBy(*group_cols).agg(
-            F.max_by(F.col("__row"), F.col("__row").getField(C.SEQUENCE_NUM)).alias("__row")
-        )
-    else:
-        final = df.groupBy(*group_cols).agg(
-            F.max_by(packed, F.col(C.SEQUENCE_NUM)).alias("__row")
-        )
+    final = df.groupBy(*group_cols).agg(
+        F.max_by(packed, F.col(C.SEQUENCE_NUM)).alias("__row")
+    )
     return final.select(*[F.col("__row").getField(c).alias(c) for c in cols])
 
 
@@ -127,7 +112,6 @@ def flatten_batch(
     sort_key_count: int = 0,
     batch_id: int | None = None,
     latest_merged_seq: int | None = None,
-    salt_buckets: int = DEFAULT_SALT_BUCKETS,
     pre_collapse: bool = True,
     slim_shuffle: bool = True,
     broadcast_winners: bool = True,
@@ -186,7 +170,6 @@ def flatten_batch(
             row_id_supported=row_id_supported,
             ordering=ordering,
             sort_key_count=sort_key_count,
-            salt_buckets=salt_buckets,
             pre_collapse=pre_collapse,
             slim_shuffle=False,
         ).select(C.SEQUENCE_NUM)
@@ -196,13 +179,13 @@ def flatten_batch(
 
     if row_id_supported and ordering == C.ORDERED:
         # Kill key == group key: flattening is pure argmax per _row_id.
-        return _argmax_by_seq(staged, [C.ROW_ID], salt_buckets)
+        return _argmax_by_seq(staged, [C.ROW_ID])
 
     if not row_id_supported and ordering == C.ORDERED and pre_collapse:
         ident = _self_identity_cond(primary_keys)
         self_updates = staged.filter(ident)
         movers = staged.filter(~ident)
-        collapsed = _argmax_by_seq(self_updates, primary_keys, salt_buckets)
+        collapsed = _argmax_by_seq(self_updates, primary_keys)
         staged = collapsed.unionByName(movers)
 
     a = staged.alias("A")

@@ -7,9 +7,10 @@ reference pipeline                     this engine
 ------------------------------------   -----------------------------------
 buffer events to GCS Avro/JSON blobs   micro-batch DataFrame (lineage
                                        replaces the spill)
-LOAD blob -> staging table             the batch IS the staging relation
-diff query (self-join flatten)         operators.flatten (salted collapse
-                                       + anti-join)
+LOAD blob -> staging table             apply_batch loads the batch's live
+                                       rows once (_loaded)
+diff query (self-join flatten)         operators.flatten (map-side partial
+                                       max_by collapse + anti-join)
 MERGE staging -> target (BQ job)       operators.merge + bucket-pruned
                                        copy-on-write snapshot commit
 job-id probing for exactly-once        batch_id recorded in snapshot
@@ -27,6 +28,7 @@ import logging
 import os
 import threading
 import time
+from contextlib import contextmanager, nullcontext
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -39,7 +41,7 @@ from ..normalize import (
     normalize_columns,
     normalize_table_name,
 )
-from ..operators.flatten import flatten_batch
+from ..operators.flatten import flatten_batch, replay_filter
 from ..operators.merge import merge_apply
 from ..retry import PermanentFailure, run_with_retry
 from ..types import DDLEvent, DDLOp, SourceProperties
@@ -55,6 +57,24 @@ def _phase_mark(phases: dict, name: str, since: float) -> float:
     return now
 
 
+@contextmanager
+def _loaded(df: DataFrame):
+    """Load ``df`` once: materialize it eagerly so every later use reads
+    the stored rows instead of re-deriving its plan (re-decoding a
+    staged Avro blob per use), and free the rows on exit, normal or
+    not.  ``localCheckpoint``, not ``persist()``: AQE fills a cache once
+    per query stage that reads it, so a persisted batch runs extra Spark
+    jobs.  A frame used after the release fails loudly
+    (CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND); it never re-reads silently."""
+    loaded = df.localCheckpoint(eager=True)
+    try:
+        yield loaded
+    finally:
+        # the loaded frame's analyzed plan is a LogicalRDD over the
+        # checkpointed RDD; unpersisting that RDD frees its blocks
+        loaded._jdf.queryExecution().analyzed().rdd().unpersist(False)
+
+
 class EventConsumer:
     def __init__(
         self,
@@ -64,7 +84,6 @@ class EventConsumer:
         source: SourceProperties | None = None,
         soft_deletes: bool = False,
         num_buckets: int = 32,
-        salt_buckets: int = 16,
         normalize_names: bool = True,
         flexible_column_naming: bool = False,
         dataset_name: str | None = None,
@@ -99,7 +118,6 @@ class EventConsumer:
         self.source = source or SourceProperties()
         self.soft_deletes = soft_deletes
         self.num_buckets = num_buckets
-        self.salt_buckets = salt_buckets
         self.normalize_names = normalize_names
         # Flexible-charset column naming (BigQueryUtils.java:45-48):
         # widens the legal field character set during normalization.
@@ -390,18 +408,27 @@ class EventConsumer:
     def apply_batch(
         self, database: str, table_name: str, staged: DataFrame, batch_id: int
     ) -> dict:
-        """Apply one table's staged micro-batch: replay-filter, flatten,
-        direct-load the snapshot portion, merge the rest, atomically
-        commit.  Returns metrics/lineage for the batch.
+        """Apply one table's staged micro-batch: load its live rows,
+        flatten, direct-load the snapshot portion, merge the rest,
+        atomically commit.  Returns metrics/lineage for the batch.
 
-        Driver-action budget (the per-batch serial floor that caps
-        scaling efficiency): a steady-state streaming batch runs exactly
-        TWO Spark jobs — (1) one combined stats job whose single
-        aggregation UNION computes the batch counts, per-bucket diff
-        rows, touched buckets and the broadcast byte estimate while
-        materializing the persisted diff, and (2) the merge+write job.
-        Round 1 ran 4-5 driver actions per batch; folding them is what
-        the judge's serial-floor verdict asked for."""
+        The live rows are those past the replay barrier —
+        ``_sequence_num`` above the table's latest merged sequence, and
+        ``_batch_id == batch_id`` when the frame carries that column.
+        They are loaded ONCE (:func:`_loaded`, the reference's LOAD blob
+        -> staging table) and released when the apply returns or raises;
+        every later use reads the loaded rows: the table-birth
+        pre-aggregate, the snapshot split, the stats job, the flatten
+        and its payload re-attach, and the direct loads.  Lineage
+        ``n_events`` and ``seq_range`` describe the live rows.
+
+        Driver-action budget (the per-batch serial floor): a
+        steady-state batch runs three driver actions — the load, one
+        combined stats job whose single aggregation UNION computes the
+        batch counts, per-bucket diff rows, touched buckets and the
+        broadcast byte estimate while materializing the persisted diff,
+        and the merge+write.  Under AQE each action runs one Spark job
+        per query stage: a traced freshness batch runs about 13."""
         t0 = time.monotonic()
         phases: dict[str, float] = {}
         table = self.table(database, table_name)
@@ -413,40 +440,43 @@ class EventConsumer:
 
         if self.normalize_names:
             staged = normalize_columns(staged, self.flexible_column_naming)
-
         last_merged = table.latest_merged_seq()
+        live = replay_filter(
+            staged, batch_id if C.BATCH_ID in staged.columns else None, last_merged
+        )
+        tp = time.monotonic()
+        with _loaded(live) as live:
+            _phase_mark(phases, "load", tp)
+            return self._apply_live(table, live, batch_id, last_merged, t0, phases)
+
+    def _apply_live(self, table, live, batch_id, last_merged, t0, phases) -> dict:
+        """:meth:`apply_batch` on the loaded live rows."""
         pks = table.primary_keys
         src = self._effective_source(table)
         nb = table.num_buckets
         seqc = F.col(C.SEQUENCE_NUM)
-
-        live_pred = seqc > F.lit(last_merged)
-        if C.BATCH_ID in staged.columns:
-            live_pred = live_pred & (F.col(C.BATCH_ID) == F.lit(batch_id))
-        has_snap = C.SNAPSHOT in staged.columns
+        has_snap = C.SNAPSHOT in live.columns
         snap_pred = (
             F.coalesce(F.col(C.SNAPSHOT), F.lit(False)) if has_snap else F.lit(False)
         )
-        stream_part = staged.filter(live_pred & ~snap_pred)
 
         if table.current_snapshot()["files"] == []:
             # Table birth: one cheap pre-aggregation decides the pure
             # direct-load fast path (O5 table-birth case) before any
             # flatten work is planned.
             tp = time.monotonic()
-            agg = staged.agg(
+            agg = live.agg(
                 F.count(F.lit(1)).alias("n"),
                 F.min(seqc).alias("min_seq"),
                 F.max(seqc).alias("max_seq"),
                 F.sum((F.col(C.OPERATION) != C.OP_INSERT).cast("long")).alias("ni"),
-                F.sum((~live_pred).cast("long")).alias("replayed"),
             ).first()
             _phase_mark(phases, "preagg", tp)
             if (agg["n"] or 0) == 0:
                 return self._record(table, batch_id, t0, skipped=True,
                                     reason="empty batch", phases=phases)
-            if (agg["ni"] or 0) == 0 and (agg["replayed"] or 0) == 0:
-                target_rows = self._staged_to_target_rows(staged, table)
+            if (agg["ni"] or 0) == 0:
+                target_rows = self._staged_to_target_rows(live, table)
                 snap = self._dml_retry(
                     lambda: table.append(
                         target_rows, batch_id, max_seq=agg["max_seq"]
@@ -459,12 +489,11 @@ class EventConsumer:
                 )
 
         diff = flatten_batch(
-            stream_part,
+            live.filter(~snap_pred),
             pks,
             row_id_supported=src.row_id_supported,
             ordering=src.ordering,
             sort_key_count=len(src.sort_key_types),
-            salt_buckets=self.salt_buckets,
             broadcast_winners=self.broadcast_flatten_winners,
         )
         if self.row_transform is not None:
@@ -498,7 +527,7 @@ class EventConsumer:
         diff = diff.persist()
         try:
             tp = time.monotonic()
-            srow, drows = self._stats_job(staged, diff, live_pred, snap_pred, pks, nb)
+            srow, drows = self._stats_job(live, diff, snap_pred, pks, nb)
             tp = _phase_mark(phases, "stats", tp)
             n_events = srow["n_events"] or 0
             if n_events == 0:
@@ -519,9 +548,7 @@ class EventConsumer:
                 # (MultiGCSWriter.java:73-76 split; the reference
                 # direct-loads snapshot blobs regardless of table state).
                 fast_path = "snapshot_append"
-                snap_rows = self._staged_to_target_rows(
-                    staged.filter(live_pred & snap_pred), table
-                )
+                snap_rows = self._staged_to_target_rows(live.filter(snap_pred), table)
                 if n_diff == 0:
                     snap = self._dml_retry(
                         lambda: table.append(
@@ -888,13 +915,11 @@ class EventConsumer:
                 self.apply_ddl(ev)
             else:
                 ddls_by_table.setdefault((ev.database, ev.table), []).append(ev)
-        # One materialization shared by every per-table filter: without
-        # the persist each table's sub-batch (and the discovery scan)
-        # re-computes the full batch subtree — T redundant passes per
-        # batch on a T-table stream.
-        release = tables is None or len(tables) > 1
-        if release:
-            batch_df = batch_df.persist()
+        # One load shared by every per-table filter: without it each
+        # table's sub-batch (and the discovery scan) re-computes the full
+        # batch subtree — T redundant passes per batch on a T-table
+        # stream.
+        shared = tables is None or len(tables) > 1
 
         def one(db: str, tb: str) -> list[dict]:
             sub = batch_df.filter(
@@ -906,7 +931,7 @@ class EventConsumer:
 
         results: list[dict] = []
         errors: list[tuple[str, str, Exception]] = []
-        try:
+        with _loaded(batch_df) if shared else nullcontext(batch_df) as batch_df:
             if tables is None:
                 tables = self._discover_topology(batch_df, database_col, table_col)
             tables = sorted(set(tables) | set(ddls_by_table))
@@ -917,9 +942,6 @@ class EventConsumer:
                         results.extend(fut.result())
                     except Exception as e:  # noqa: BLE001 — aggregated below
                         errors.append((db, tb, e))
-        finally:
-            if release:
-                batch_df.unpersist()
         if errors:
             detail = "; ".join(f"{db}.{tb}: {e}" for db, tb, e in errors)
             raise RuntimeError(
@@ -932,21 +954,20 @@ class EventConsumer:
 
     _STAT_COLS = ["n_events", "min_seq", "max_seq", "n_snap_live", "snap_max_seq"]
 
-    def _stats_job(self, staged, diff, live_pred, snap_pred, pks, num_buckets):
+    def _stats_job(self, live, diff, snap_pred, pks, num_buckets):
         """ONE Spark job computing every per-batch scalar the driver
-        needs: batch counts/seq-range over the raw staged scan, and —
+        needs: batch counts/seq-range over the loaded live rows, and —
         through the same action that materializes the persisted diff —
         per-new-bucket diff row counts, byte estimates, and the set of
         old-key buckets each new bucket's rows came from."""
         seqc = F.col(C.SEQUENCE_NUM)
         src = self.source
-        snap_live = snap_pred & live_pred
-        s_row = staged.agg(
+        s_row = live.agg(
             F.count(F.lit(1)).alias("n_events"),
             F.min(seqc).alias("min_seq"),
             F.max(seqc).alias("max_seq"),
-            F.sum(snap_live.cast("long")).alias("n_snap_live"),
-            F.max(F.when(snap_live, seqc)).alias("snap_max_seq"),
+            F.sum(snap_pred.cast("long")).alias("n_snap_live"),
+            F.max(F.when(snap_pred, seqc)).alias("snap_max_seq"),
         )
 
         if src.row_id_supported:

@@ -61,7 +61,7 @@ def test_unique_key_fast_path_matches_exact_merge(spark, tmp_path):
                              "single_job_merge_strategy": "broadcast"}),
     ):
         c = EventConsumer(
-            spark, str(tmp_path / mode / "wh"), num_buckets=4, salt_buckets=2,
+            spark, str(tmp_path / mode / "wh"), num_buckets=4,
             # force the broadcast strategy on the standard path too
             broadcast_merge_max_rows=10_000_000,
             broadcast_merge_max_bytes=1 << 40, **kw,
@@ -112,7 +112,7 @@ def test_single_job_apply_state_identical_without_aqe(spark, tmp_path):
         try:
             c = EventConsumer(
                 spark, str(tmp_path / mode / "wh"), num_buckets=4,
-                salt_buckets=2, assume_unique_keys=True,
+                assume_unique_keys=True,
                 single_job_per_batch=True,
                 single_job_merge_strategy="broadcast",
             )

@@ -78,7 +78,7 @@ def test_changelog_diff_classification(spark):
 
 def _build(spark, tmp_path, soft):
     c = EventConsumer(
-        spark, str(tmp_path / "wh"), num_buckets=8, salt_buckets=4,
+        spark, str(tmp_path / "wh"), num_buckets=8,
         soft_deletes=soft,
     )
     c.apply_ddl(
@@ -235,7 +235,7 @@ def test_changelog_replay_property(spark, tmp_path):
         events = _materialize(raw)
         root = os.path.join(str(tmp_path), uuid.uuid4().hex)
         c = EventConsumer(spark, os.path.join(root, "wh"), num_buckets=2,
-                          salt_buckets=2, soft_deletes=soft)
+                          soft_deletes=soft)
         c.apply_ddl(
             DDLEvent(DDLOp.CREATE_TABLE, "web", "pages", schema=PAGES,
                      primary_keys=["url"])
@@ -356,8 +356,7 @@ def test_driver_changes_dir_feed_exactly_once(spark, tmp_path):
     ev = synth_events(spark, 1200, 60, batch_size=400, delete_frac=0.1).cache()
     batches = [(b, ev.filter(ev[C.BATCH_ID] == b)) for b in range(3)]
 
-    c = EventConsumer(spark, str(tmp_path / "wh"), num_buckets=4,
-                      salt_buckets=2)
+    c = EventConsumer(spark, str(tmp_path / "wh"), num_buckets=4)
     c.apply_ddl(
         DDLEvent(DDLOp.CREATE_TABLE, "web", "pages", schema=PAGES,
                  primary_keys=["url"])
@@ -368,8 +367,7 @@ def test_driver_changes_dir_feed_exactly_once(spark, tmp_path):
         run_microbatch_loop(c, batches, "web", "pages", cp,
                             crash_after_apply_batch=1, changes_dir=feed)
     # resume: batch 1 replays as a no-op, feed partition idempotent
-    c2 = EventConsumer(spark, str(tmp_path / "wh"), num_buckets=4,
-                       salt_buckets=2)
+    c2 = EventConsumer(spark, str(tmp_path / "wh"), num_buckets=4)
     run_microbatch_loop(c2, batches, "web", "pages", cp, changes_dir=feed)
 
     t = c2.table("web", "pages")

@@ -117,7 +117,7 @@ def oracle_state(rows):
 
 @pytest.fixture
 def pages_consumer(spark, tmp_path):
-    c = EventConsumer(spark, str(tmp_path / "wh"), num_buckets=8, salt_buckets=4)
+    c = EventConsumer(spark, str(tmp_path / "wh"), num_buckets=8)
     c.apply_ddl(
         DDLEvent(DDLOp.CREATE_TABLE, "web", "pages", schema=PAGES, primary_keys=["url"])
     )
@@ -138,7 +138,7 @@ def gen_batches(spark, n_events, n_urls, batch_size, **kw):
 @pytest.mark.parametrize("soft", [False, True])
 def test_stream_replay_matches_python_oracle(spark, tmp_path, soft):
     consumer = EventConsumer(
-        spark, str(tmp_path / f"wh{soft}"), num_buckets=8, salt_buckets=4,
+        spark, str(tmp_path / f"wh{soft}"), num_buckets=8,
         soft_deletes=soft,
     )
     consumer.apply_ddl(

@@ -170,7 +170,7 @@ def test_compact_is_state_neutral_and_reduces_files(spark, tmp_path):
 
     from test_consumer import PAGES
 
-    c = EventConsumer(spark, str(tmp_path / "wh"), num_buckets=4, salt_buckets=2)
+    c = EventConsumer(spark, str(tmp_path / "wh"), num_buckets=4)
     c.apply_ddl(
         DDLEvent(DDLOp.CREATE_TABLE, "web", "pages", schema=PAGES,
                  primary_keys=["url"])
@@ -249,7 +249,7 @@ def test_rebucket_partition_evolution(spark, tmp_path):
 
     from test_consumer import PAGES
 
-    c = EventConsumer(spark, str(tmp_path / "wh"), num_buckets=4, salt_buckets=2)
+    c = EventConsumer(spark, str(tmp_path / "wh"), num_buckets=4)
     c.apply_ddl(
         DDLEvent(DDLOp.CREATE_TABLE, "web", "pages", schema=PAGES,
                  primary_keys=["url"])

@@ -4,6 +4,8 @@
   (partition-prunable at scale);
 - slim-shuffle flatten re-attaches payloads via a BROADCAST semi join
   (payload side never shuffles);
+- the flatten's per-key argmax shuffles once, over a map-side partial
+  ``max_by`` (hot keys collapse before the exchange);
 - the broadcast merge plan contains no sort-merge join and no exchange
   of the target relation.
 """
@@ -16,7 +18,11 @@ from pyspark.sql import types as T
 
 from bigquery_delta_plugins_spark import constants as C
 from bigquery_delta_plugins_spark import schemas
-from bigquery_delta_plugins_spark.operators.flatten import flatten_batch, replay_filter
+from bigquery_delta_plugins_spark.operators.flatten import (
+    _argmax_by_seq,
+    flatten_batch,
+    replay_filter,
+)
 from bigquery_delta_plugins_spark.operators.merge import merge_apply
 from bigquery_delta_plugins_spark.sources.gen import synth_events
 
@@ -55,6 +61,24 @@ def test_slim_flatten_broadcasts_payload_rejoin(spark, tmp_path):
     plan = plan_of(flatten_batch(staged, ["url"]))
     # survivors are broadcast back onto the payload scan
     assert "BroadcastHashJoin" in plan and "LeftSemi" in plan, plan
+
+
+def test_argmax_collapse_is_one_exchange_over_partial_max_by(spark):
+    """Hot-key safety without a salt: the per-key argmax shuffles once,
+    and a partial ``max_by`` below that exchange collapses each key's
+    run map-side before any reducer sees it."""
+    events = spark.range(1000).select(
+        (F.col("id") % 3).alias("url"),
+        F.col("id").alias(C.SEQUENCE_NUM),
+        F.lit("payload").alias("html"),
+    )
+    buf = io.StringIO()
+    with contextlib.redirect_stdout(buf):
+        _argmax_by_seq(events, ["url"]).explain()
+    lines = buf.getvalue().splitlines()
+    exchanges = [i for i, l in enumerate(lines) if "Exchange" in l]
+    assert len(exchanges) == 1, lines
+    assert any("partial_max_by" in l for l in lines[exchanges[0] + 1:]), lines
 
 
 def test_broadcast_merge_has_no_target_exchange(spark):

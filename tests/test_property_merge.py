@@ -85,7 +85,7 @@ def test_engine_matches_reference_merge_algebra(spark, tmp_path, raw, soft):
     events = _materialize(raw)
     root = os.path.join(str(tmp_path), uuid.uuid4().hex)
     consumer = EventConsumer(
-        spark, os.path.join(root, "wh"), num_buckets=2, salt_buckets=2,
+        spark, os.path.join(root, "wh"), num_buckets=2,
         soft_deletes=soft,
     )
     consumer.apply_ddl(

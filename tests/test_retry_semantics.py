@@ -45,7 +45,7 @@ PAGES = T.StructType(
 
 
 def _consumer(spark, path, **kw):
-    c = EventConsumer(spark, str(path), num_buckets=8, salt_buckets=4, **kw)
+    c = EventConsumer(spark, str(path), num_buckets=8, **kw)
     c.apply_ddl(
         DDLEvent(DDLOp.CREATE_TABLE, "web", "pages", schema=PAGES,
                  primary_keys=["url"])
@@ -96,8 +96,7 @@ def test_failed_attempt_then_retry_is_exactly_once(spark, tmp_path):
     assert table2.latest_batch_id() == 0
 
     # retry (fresh consumer = fresh worker) re-applies batch 1, then 2
-    retry = EventConsumer(spark, str(tmp_path / "crash"), num_buckets=8,
-                          salt_buckets=4)
+    retry = EventConsumer(spark, str(tmp_path / "crash"), num_buckets=8)
     retry.apply_batch("web", "pages", batches[1], 1)
     retry.apply_batch("web", "pages", batches[2], 2)
     got_table = retry.table("web", "pages")
@@ -204,8 +203,7 @@ def test_committed_attempt_is_adopted_not_reapplied(spark, tmp_path):
 
     # "restart": a new consumer replays batch 1 (source resumed from the
     # pre-batch offset) — adopted via batch-id dedup, zero new snapshots
-    retry = EventConsumer(spark, str(tmp_path / "wh"), num_buckets=8,
-                          salt_buckets=4)
+    retry = EventConsumer(spark, str(tmp_path / "wh"), num_buckets=8)
     m2 = retry.apply_batch("web", "pages", b1, 1)
     assert m2.get("skipped") and "already committed" in m2["reason"]
     t = retry.table("web", "pages")

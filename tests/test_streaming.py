@@ -33,7 +33,7 @@ def _write_batch_file(ev, b, events_dir):
 
 
 def _mk_consumer(spark, root):
-    c = EventConsumer(spark, os.path.join(root, "wh"), num_buckets=8, salt_buckets=4)
+    c = EventConsumer(spark, os.path.join(root, "wh"), num_buckets=8)
     c.apply_ddl(
         DDLEvent(DDLOp.CREATE_TABLE, "web", "pages", schema=PAGES, primary_keys=["url"])
     )

@@ -62,7 +62,7 @@ agg = staged.agg(
 print(f"preagg: {time.monotonic()-t:.1f}s  n={agg['n']}", flush=True)
 
 t = time.monotonic()
-diff = flatten_batch(staged, ["url"], salt_buckets=16)
+diff = flatten_batch(staged, ["url"])
 diff = extract_text_transform(diff).persist()
 n_diff = diff.count()
 print(f"flatten+extract(count): {time.monotonic()-t:.1f}s  diff={n_diff}", flush=True)

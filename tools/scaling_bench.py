@@ -11,7 +11,7 @@ Protocol:
    identical bytes.
 2. For each parallelism level, spawn a FRESH python/JVM subprocess (a
    shared JVM contaminates timings); the level replays every batch
-   through the full pipeline: read -> normalize -> salted flatten ->
+   through the full pipeline: read -> normalize -> flatten ->
    vectorized html->text extraction on the survivors (pandas UDF) ->
    merge -> atomic snapshot commit.  Batch 0 is warmup (JIT/codegen/
    Arrow/python-worker spinup — one-time costs a long-lived streaming
